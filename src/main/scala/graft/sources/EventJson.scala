@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, from_json, length, trim}
+import org.apache.spark.sql.functions.{array, col, from_json, inline, length, trim}
 import org.apache.spark.sql.types._
 
 /** JSON-lines event source — the reference's native wire format (SURVEY.md
@@ -43,14 +43,18 @@ object EventJson {
     * column (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) and
     * re-parses under a pruned schema, which changes whether a truncated
     * record keeps its prefix fields — with an explicit parse step the
-    * corrupt lane is an ordinary column with one stable meaning. Same
-    * single pass over the bytes.
+    * corrupt lane is an ordinary column with one stable meaning.
+    *
+    * The parse sits behind a Generate (`inline` of a one-element array)
+    * so each line is parsed exactly once: Catalyst never pushes a filter
+    * on generated columns below the generator. Through a plain
+    * `from_json(..) as r` alias every pushed conjunct would inline its
+    * own copy of the parse (PlanSpec pins the single `from_json`).
     */
   private def parsed(lines: DataFrame): DataFrame =
     lines
       .filter(length(trim(col("value"))) > 0)
-      .select(from_json(col("value"), schema, parseOpts).as("r"))
-      .select(col("r.*"))
+      .select(inline(array(from_json(col("value"), schema, parseOpts))))
 
   /** Batch read of a JSONL directory/file. One pass, no inference scan. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -1,6 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.aql.Aql
+import graft.operators.Filters
+import graft.sources.EventJson
+import graft.streaming.{AqlPipeline, EventStream}
 
 /** Plan-shape regression guards for the scale checklist (SCALING.md):
   * these properties were verified by hand via graft.Explain each round —
@@ -14,6 +25,25 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
+
+  private object aqe extends AdaptiveSparkPlanHelper
+
+  /** `from_json` calls anywhere in an executed plan. */
+  private def fromJsonCalls(p: SparkPlan): Int =
+    aqe.collectWithSubqueries(p) { case n =>
+      n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+    }.sum
+
+  /** The fixture events as ONE JSONL file: one micro-batch when tailed. */
+  private lazy val jsonFile: String = {
+    val dir = tmpDir("graft-plan-json")
+    graft.sources.Tables.events(spark, sf0001)
+      .coalesce(1).write.mode("append").json(dir)
+    dir
+  }
+
+  private val sinkAqls =
+    Seq("FROM allEvents", "FROM 'purchase' FILTER _.value > 50")
 
   test("q12: tag + value predicates reach the parquet scan (PushedFilters)") {
     val p = plan("q12_filter_tag_and")
@@ -339,5 +369,37 @@ class PlanSpec extends AnyFunSuite {
         l.contains("bg#"))
     assert(!badExchange, p)
     assert(p.contains("BroadcastHashJoin"), p)
+  }
+
+  test("JSON ingest: each line is parsed ONCE under attachJson's filter " +
+    "stack — no predicate inlines its own from_json copy") {
+    // AqlPipeline.attachJson's selection over a batch read: corrupt-lane
+    // and key filters, the µs columns, the tag set, then the AQL predicate
+    def shape(events: DataFrame, aql: String): DataFrame =
+      Filters.withTags(EventStream.withEventTime(
+          EventJson.wellFormed(events).filter(col("event_id").isNotNull)))
+        .filter(Aql.predicate(aql)).drop("tags")
+    for (aql <- sinkAqls) {
+      val p = shape(EventJson.read(spark, jsonFile), aql)
+        .queryExecution.executedPlan
+      assert(fromJsonCalls(p) == 1, s"$aql:\n$p")
+    }
+  }
+
+  test("JSON ingest: one from_json per line in a streaming attachJson " +
+    "micro-batch too") {
+    if (System.getProperty("derby.system.home") == null)
+      System.setProperty("derby.system.home", tmpDir("graft-plan-derby"))
+    for (aql <- sinkAqls) {
+      val url = s"jdbc:derby:${tmpDir("graft-plan-db")}/db;create=true"
+      val q = AqlPipeline.attachJson(spark, jsonFile, aql, url,
+        tmpDir("graft-plan-ckpt")).start()
+      val p = try {
+        q.processAllAvailable()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+      } finally q.stop()
+      assert(fromJsonCalls(p) == 1, s"$aql:\n$p")
+    }
   }
 }
